@@ -1,15 +1,15 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   *
-  * Each query is fully materialized through the `noop` sink — a
-  * `count()` would let Catalyst prune every column the count doesn't
-  * need, silently skipping the projection work (regex chains, sketch
-  * signatures) the query exists to measure. A warmup query runs first
-  * (untimed) so session/codegen init doesn't land on whichever query
-  * happens to run first.
+  * Each query is built and fully materialized by [[Harness.time]]
+  * (the `noop` sink, never a column-pruning `count()`). A warmup query
+  * runs first (untimed) so session/codegen init doesn't land on
+  * whichever query happens to run first.
   *
   * Aggregation policy is UNIFORM: three whole-suite passes, every
   * query keeps its min of three. A transient spike (GC, a concurrently
@@ -30,7 +30,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Pre-launch 1-minute load average, sampled BEFORE the session
     // exists: every later sample is polluted by the bench's own 32-way
     // work (a quiet-machine run still shows boundary load1 up to ~6),
@@ -38,14 +37,8 @@ object Bench {
     // the record-quality gate below keys on it.
     val loadPre = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = Harness.session()
+    Harness.time(SparkEntry.entry(spark)) // warmup: its time and any failure are dropped
     Thread.sleep(3000) // settle: a concurrently-exiting JVM (sbt test) inflates early timings
     // The four stream_* drains churn state-store commits and temp-dir cleanup
     // threads; in plain sorted order that noise lands on whichever queries sort
@@ -53,13 +46,14 @@ object Bench {
     // Run every batch query first, then the drains last.
     val (drains, batch) = SparkEntry.queries.toSeq.sortBy(_._1).partition(_._1.startsWith("stream_"))
     val order = batch ++ drains
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // a crashed query must not masquerade as a fast pass: record -1.0
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
-    }
+    // a crashed query must not masquerade as a fast pass: record -1.0,
+    // and keep its first failure's cause for the "failures" object
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      Harness.time(fn(spark, sfDir)) match {
+        case Right(secs) => secs
+        case Left(e) => failures.getOrElseUpdate(name, Harness.describe(e)); -1.0
+      }
     // 1-minute system load average at each pass boundary: n+1 samples
     // bracket the n passes, so a driver-side >1.5x row can be checked
     // against machine contention without a judge re-run. -1 where the
@@ -68,7 +62,7 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loads = scala.collection.mutable.ListBuffer(loadAvg())
     val passes = (1 to 3).map { _ =>
-      val p = order.map { case (name, fn) => name -> timeOnce(fn) }
+      val p = order.map { case (name, fn) => name -> timeOnce(name, fn) }
       loads += loadAvg()
       p
     }
@@ -80,14 +74,17 @@ object Bench {
       rows.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val errs = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
+    val failed = failures.map { case (k, v) => Harness.jsonString(k) + ":" + Harness.jsonString(v) }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // all raw passes + per-boundary load averages ride along so the
     // harness (or a judge) can apply its own aggregation policy and
     // adjudicate contention instead of trusting the min
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},""" +
       passes.zipWithIndex.map { case (p, i) => s""""pass${i + 1}":${obj(p)}""" }.mkString(",") +
-      s""","load1":[${loads.mkString(",")}],"load1_prelaunch":$loadPre,""" +
-      s""""errors":$errs,"sf":"$sfDir"}"""
+      s""","load1":[${loads.mkString(",")}],""" +
+      s""""load1_prelaunch":${"%.4f".formatLocal(java.util.Locale.ROOT, loadPre)},""" +
+      s""""errors":$errs,"failures":$failed,"sf":"$sfDir"}"""
     println(json)
     // also land the line as a file: the driver's stdout capture tail-
     // truncates long sbt output, and a judge diffing rounds should not
@@ -114,7 +111,7 @@ object Bench {
         "writing BENCH_LOCAL_REJECTED.json, not the canonical record " +
         "(SPARK_GRAFT_FORCE_RECORD=1 overrides)")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(target), json + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) => System.err.println(s"BENCH: could not write $target: ${Harness.describe(e)}") }
     // Canonical-number rule (BASELINE.md round 17+): the COMMITTED file
     // is the cross-round record. Enforcement lives in BenchRecordSpec
     // (fails when the committed record's query set drifts from

@@ -4,13 +4,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{Extensions => E, ExtensionOracles => EO, Inventory => I, Oracles => O, StreamingOracles => SO, StreamingQueries => SQ}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One declared query: its name, its builder over (session, sf dir), and
+  * the DuckDB-equivalent SQL when its result is exactly reproducible
+  * outside Spark (same column names, same total ORDER BY, same
+  * rounding). `oracle = None` marks a rows-only query: only its row
+  * count is checked outside ScalaTest, which asserts its bounds. */
+final case class Declared(name: String,
+                          build: (SparkSession, String) => DataFrame,
+                          oracle: Option[String])
+
+/** The query registry behind Bench, Verify, the CLI and the dev tools —
+  * see SURVEY.md §7.
   *
-  * `queries` holds one entry per implemented operator from SURVEY.md §2;
-  * `oracleSql` holds the DuckDB-equivalent SQL for every entry whose
-  * result is exactly reproducible outside Spark (same column names, same
-  * total ORDER BY, same rounding). Entries without an oracle are
-  * rows-only checked by the driver and asserted in ScalaTest.
+  * [[declared]] is the one list: every implemented operator from
+  * SURVEY.md §2, each named once next to its oracle. `queries` and
+  * `oracleSql` are views of it.
   */
 object SparkEntry {
 
@@ -18,470 +26,269 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     I.q5GroupbyAgg(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_derived_key"    -> (I.q1DerivedKey(_, _)),
-    "q2_anti_join"      -> (I.q2AntiJoin(_, _)),
-    "q3_dim_join"       -> (I.q3DimJoin(_, _)),
-    "q4_scalar_subquery" -> (I.q4ScalarSubquery(_, _)),
-    "q5_groupby_agg"    -> (I.q5GroupbyAgg(_, _)),
-    "q6_distinct"       -> (I.q6Distinct(_, _)),
-    "q6b_distinct_values" -> (I.q6bDistinctValues(_, _)),
-    "q7_rollup"         -> (I.q7Rollup(_, _)),
-    "q8_approx_distinct" -> (I.q8ApproxDistinct(_, _)),
-    "q9_window_rank"    -> (I.q9WindowRank(_, _)),
-    "q10_window_frame"  -> (I.q10WindowFrame(_, _)),
-    "q11_topk"          -> (I.q11TopK(_, _)),
-    "q12_setops"        -> (I.q12SetOps(_, _)),
-    "q13_semi_join"     -> (I.q13SemiJoin(_, _)),
-    "q14_range_join"    -> (I.q14RangeJoin(_, _)),
-    "q15_phone_regex"   -> (I.q15PhoneRegex(_, _)),
-    "q16_date_json"     -> (I.q16DateJson(_, _)),
-    "q17_cross_join"    -> (I.q17CrossJoin(_, _)),
-    "q18_tumbling_day"  -> (I.q18TumblingDay(_, _)),
-    "q19_grouping_sets" -> (I.q19GroupingSets(_, _)),
-    "q20_cosine_topk"   -> (I.q20CosineTopk(_, _)),
-    "q21_array_ops"     -> (I.q21ArrayOps(_, _)),
-    "q22_asof_join"     -> (I.q22AsofJoin(_, _)),
-    "q23_sessionize"    -> (I.q23Sessionize(_, _)),
-    "q24_percentiles"   -> (I.q24Percentiles(_, _)),
-    "q24b_approx_percentiles" -> (I.q24bApproxPercentiles(_, _)),
-    "q25_topk_agg"      -> (I.q25TopkAgg(_, _)),
-    "q26_cube"          -> (I.q26Cube(_, _)),
-    "q27_pivot"         -> (I.q27Pivot(_, _)),
-    "q27b_unpivot"      -> (I.q27bUnpivot(_, _)),
-    "q28_window_nav"    -> (I.q28WindowNav(_, _)),
-    "q29_funnel"        -> (I.q29Funnel(_, _)),
-    "q30_full_outer"    -> (I.q30FullOuter(_, _)),
-    "q31_correlated"    -> (I.q31Correlated(_, _)),
-    "q32_recursive"     -> (I.q32Recursive(_, _)),
-    "q33_graph_walk"    -> (I.q33GraphWalk(_, _)),
-    "q34_range_frame"   -> (I.q34RangeFrame(_, _)),
-    "q35_window_distinct" -> (I.q35WindowDistinct(_, _)),
-    "q36_ntile"         -> (I.q36Ntile(_, _)),
-    "q37_gap_fill"      -> (I.q37GapFill(_, _)),
+  val declared: Seq[Declared] = Seq(
+    Declared("q1_derived_key", I.q1DerivedKey(_, _), Some(O.q1DerivedKey)),
+    Declared("q2_anti_join", I.q2AntiJoin(_, _), Some(O.q2AntiJoin)),
+    Declared("q3_dim_join", I.q3DimJoin(_, _), Some(O.q3DimJoin)),
+    Declared("q4_scalar_subquery", I.q4ScalarSubquery(_, _), Some(O.q4ScalarSubquery)),
+    Declared("q5_groupby_agg", I.q5GroupbyAgg(_, _), Some(O.q5GroupbyAgg)),
+    Declared("q6_distinct", I.q6Distinct(_, _), Some(O.q6Distinct)),
+    Declared("q6b_distinct_values", I.q6bDistinctValues(_, _), Some(O.q6bDistinctValues)),
+    Declared("q7_rollup", I.q7Rollup(_, _), Some(O.q7Rollup)),
+    Declared("q8_approx_distinct", I.q8ApproxDistinct(_, _), Some(O.q8ApproxDistinct)),
+    Declared("q9_window_rank", I.q9WindowRank(_, _), Some(O.q9WindowRank)),
+    Declared("q10_window_frame", I.q10WindowFrame(_, _), Some(O.q10WindowFrame)),
+    Declared("q11_topk", I.q11TopK(_, _), Some(O.q11TopK)),
+    Declared("q12_setops", I.q12SetOps(_, _), Some(O.q12SetOps)),
+    Declared("q13_semi_join", I.q13SemiJoin(_, _), Some(O.q13SemiJoin)),
+    Declared("q14_range_join", I.q14RangeJoin(_, _), Some(O.q14RangeJoin)),
+    Declared("q15_phone_regex", I.q15PhoneRegex(_, _), Some(O.q15PhoneRegex)),
+    Declared("q16_date_json", I.q16DateJson(_, _), Some(O.q16DateJson)),
+    Declared("q17_cross_join", I.q17CrossJoin(_, _), Some(O.q17CrossJoin)),
+    Declared("q18_tumbling_day", I.q18TumblingDay(_, _), Some(O.q18TumblingDay)),
+    Declared("q19_grouping_sets", I.q19GroupingSets(_, _), Some(O.q19GroupingSets)),
+    Declared("q20_cosine_topk", I.q20CosineTopk(_, _), Some(O.q20CosineTopk)),
+    Declared("q21_array_ops", I.q21ArrayOps(_, _), Some(O.q21ArrayOps)),
+    Declared("q22_asof_join", I.q22AsofJoin(_, _), Some(O.q22AsofJoin)),
+    Declared("q23_sessionize", I.q23Sessionize(_, _), Some(O.q23Sessionize)),
+    Declared("q24_percentiles", I.q24Percentiles(_, _), Some(O.q24Percentiles)),
+    Declared("q24b_approx_percentiles", I.q24bApproxPercentiles(_, _),
+      Some(O.q24bApproxPercentiles)),
+    Declared("q25_topk_agg", I.q25TopkAgg(_, _), Some(O.q25TopkAgg)),
+    Declared("q26_cube", I.q26Cube(_, _), Some(O.q26Cube)),
+    Declared("q27_pivot", I.q27Pivot(_, _), Some(O.q27Pivot)),
+    Declared("q27b_unpivot", I.q27bUnpivot(_, _), Some(O.q27bUnpivot)),
+    Declared("q28_window_nav", I.q28WindowNav(_, _), Some(O.q28WindowNav)),
+    Declared("q29_funnel", I.q29Funnel(_, _), Some(O.q29Funnel)),
+    Declared("q30_full_outer", I.q30FullOuter(_, _), Some(O.q30FullOuter)),
+    Declared("q31_correlated", I.q31Correlated(_, _), Some(O.q31Correlated)),
+    Declared("q32_recursive", I.q32Recursive(_, _), Some(O.q32Recursive)),
+    Declared("q33_graph_walk", I.q33GraphWalk(_, _), Some(O.q33GraphWalk)),
+    Declared("q34_range_frame", I.q34RangeFrame(_, _), Some(O.q34RangeFrame)),
+    Declared("q35_window_distinct", I.q35WindowDistinct(_, _), Some(O.q35WindowDistinct)),
+    Declared("q36_ntile", I.q36Ntile(_, _), Some(O.q36Ntile)),
+    Declared("q37_gap_fill", I.q37GapFill(_, _), Some(O.q37GapFill)),
     // LLM-data-pipeline operators (BASELINE.json north star)
-    "dedup_exact"       -> (E.dedupExact(_, _)),
-    "dedup_url"         -> (E.dedupUrl(_, _)),
-    "domain_quota"      -> (E.domainQuota(_, _)),
-    "dedup_substring"   -> (E.dedupSubstring(_, _)),
-    "text_ngrams"       -> (E.textNgrams(_, _)),
-    "text_pmi"          -> (E.textPmi(_, _)),
-    "text_heavy_hitters" -> (E.textHeavyHitters(_, _)),
-    "events_hll_daily"  -> (E.eventsHllDaily(_, _)),
-    "dedup_jaccard"     -> (E.dedupJaccard(_, _)),
-    "dedup_containment" -> (E.dedupContainment(_, _)),
-    "dedup_jaccard_char" -> (E.dedupJaccardChar(_, _)),
-    "dedup_minhash"     -> (E.dedupMinhash(_, _)),
-    "dedup_minhash_clusters" -> (E.dedupMinhashClusters(_, _)),
-    "corpus_overlap"    -> (E.corpusOverlap(_, _)),
-    "dedup_minhash_verify" -> (E.dedupMinhashVerify(_, _)),
-    "corpus_incremental" -> (E.corpusIncremental(_, _)),
-    "dedup_simhash"     -> (E.dedupSimhash(_, _)),
-    "dedup_embedding"   -> (E.dedupEmbedding(_, _)),
-    "dedup_semantic"    -> (E.dedupSemantic(_, _)),
-    "ann_lsh_topk"      -> (E.annLsh(_, _)),
-    "ann_ivf_topk"      -> (E.annIvf(_, _)),
-    "ann_ivf_stored"    -> (E.annIvfStored(_, _)),
-    "ann_ivf_delta"     -> (E.annIvfDelta(_, _)),
-    "ann_ivf_kmeans"    -> (E.annIvfKmeans(_, _)),
-    "ann_filtered"      -> (E.annFiltered(_, _)),
-    "ann_ivfpq_topk"    -> (E.annIvfPq(_, _)),
-    "ann_knn_join"      -> (E.annKnnJoin(_, _)),
-    "emb_quantize"      -> (E.embQuantize(_, _)),
-    "emb_centroid"      -> (E.embCentroid(_, _)),
-    "emb_classify"      -> (E.embClassify(_, _)),
-    "ann_q8_topk"       -> (E.annQ8(_, _)),
-    "ann_q8_range"      -> (E.annQ8Range(_, _)),
-    "corpus_split"      -> (E.corpusSplit(_, _)),
-    "corpus_sample"     -> (E.corpusSample(_, _)),
-    "corpus_reservoir"  -> (E.corpusReservoir(_, _)),
-    "corpus_leakage"    -> (E.corpusLeakage(_, _)),
-    "corpus_pack"       -> (E.corpusPack(_, _)),
-    "corpus_interleave" -> (E.corpusInterleave(_, _)),
-    "corpus_mix"        -> (E.corpusMix(_, _)),
-    "corpus_decontam"   -> (E.corpusDecontam(_, _)),
-    "corpus_decontam_bloom" -> (E.corpusDecontamBloom(_, _)),
-    "corpus_chunk"      -> (E.corpusChunk(_, _)),
-    "corpus_offsets"    -> (E.corpusOffsets(_, _)),
-    "corpus_shard"      -> (E.corpusShard(_, _)),
-    "corpus_token_budget" -> (E.corpusTokenBudget(_, _)),
-    "corpus_hist"       -> (E.corpusHist(_, _)),
-    "corpus_stats"      -> (E.corpusStats(_, _)),
-    "layout_zorder"     -> (E.layoutZorder(_, _)),
-    "layout_hilbert"    -> (E.layoutHilbert(_, _)),
-    "layout_hilbert_stored" -> (E.layoutHilbertStored(_, _)),
-    "layout_zorder_stored" -> (E.layoutZorderStored(_, _)),
-    "line_dedup"        -> (E.lineDedup(_, _)),
-    "corpus_curate"     -> (E.corpusCurate(_, _)),
-    "corpus_curate2"    -> (E.corpusCurate2(_, _)),
-    "corpus_curate3"    -> (E.corpusCurate3(_, _)),
-    "corpus_curate4"    -> (E.corpusCurate4(_, _)),
-    "text_tokens"       -> (E.textTokens(_, _)),
-    "text_quality"      -> (E.textQuality(_, _)),
-    "text_langid"       -> (E.textLangid(_, _)),
-    "text_tfidf"        -> (E.textTfidf(_, _)),
-    "text_bm25"         -> (E.textBm25(_, _)),
-    "retrieve_hybrid"   -> (E.retrieveHybrid(_, _)),
-    "emb_hard_negatives" -> (E.embHardNegatives(_, _)),
-    "text_redact"       -> (E.textRedact(_, _)),
-    "text_repetition"   -> (E.textRepetition(_, _)),
-    "text_familiarity"  -> (E.textFamiliarity(_, _)),
-    "text_lm_bigram"    -> (E.textLmBigram(_, _)),
-    "text_lm_trigram"   -> (E.textLmTrigram(_, _)),
-    "bpe_tokens"        -> (E.bpeTokens(_, _)),
-    "text_compress"     -> (E.textCompress(_, _)),
-    "text_script"       -> (E.textScript(_, _)),
-    "text_gopher"       -> (E.textGopher(_, _)),
-    "url_filter"        -> (E.urlFilter(_, _)),
-    "url_robots"        -> (E.urlRobots(_, _)),
-    "text_fingerprint"  -> (E.textFingerprint(_, _)),
-    "text_winnow"       -> (E.textWinnow(_, _)),
-    "mm_bytes"          -> (E.mmBytes(_, _)),
-    "mm_decode"         -> (E.mmDecode(_, _)),
-    "mm_frames"         -> (E.mmFrames(_, _)),
-    "mm_resize"         -> (E.mmResize(_, _)),
-    "mm_audio"          -> (E.mmAudio(_, _)),
-    "mm_pcm"            -> (E.mmPcm(_, _)),
-    "mm_video"          -> (E.mmVideo(_, _)),
-    "mm_video_frames"   -> (E.mmVideoFrames(_, _)),
-    "mm_video_sample"   -> (E.mmVideoSample(_, _)),
-    "mm_video_dedup"    -> (E.mmVideoDedup(_, _)),
-    "mm_video_phash"    -> (E.mmVideoPhash(_, _)),
-    "mm_video_scene"    -> (E.mmVideoScene(_, _)),
-    "mm_audio_scene"    -> (E.mmAudioScene(_, _)),
-    "mm_audio_dedup"    -> (E.mmAudioDedup(_, _)),
-    "mm_audio_fp"       -> (E.mmAudioFp(_, _)),
-    "mm_audio_neardup"  -> (E.mmAudioNeardup(_, _)),
-    "mm_image_dedup"    -> (E.mmImageDedup(_, _)),
-    "mm_image_phash"    -> (E.mmImagePhash(_, _)),
-    "mm_image_neardup"  -> (E.mmImageNeardup(_, _)),
-    "mm_census"         -> (E.mmCensus(_, _)),
-    "mm_curate"         -> (E.mmCurate(_, _)),
-    // scale utilities on the declared surface: salt-invariant skew join,
-    // layout-invariant bucketed join (zero-Exchange plan in PlanAuditSpec)
-    "skew_join"         -> (E.skewJoin(_, _)),
-    "bucketed_join"     -> (E.bucketedJoin(_, _)),
-    // iterative BSP graph computation (fixed-point integer PageRank,
-    // min-label connected components)
-    "graph_pagerank"    -> (E.graphPagerank(_, _)),
-    "graph_hits"        -> (E.graphHits(_, _)),
-    "graph_modularity"  -> (E.graphModularity(_, _)),
-    "graph_conductance" -> (E.graphConductance(_, _)),
-    "graph_modularity_volume" -> (E.graphModularityVolume(_, _)),
-    "graph_hits_volume" -> (E.graphHitsVolume(_, _)),
-    "graph_pagerank_wide" -> (E.graphPagerankWide(_, _)),
-    "graph_pagerank_weighted" -> (E.graphPagerankWeighted(_, _)),
-    "graph_pagerank_volume" -> (E.graphPagerankVolume(_, _)),
-    "graph_ppr_volume"  -> (E.graphPprVolume(_, _)),
-    "graph_pagerank_weighted_volume" -> (E.graphPagerankWeightedVolume(_, _)),
-    "graph_cc_volume"   -> (E.graphCcVolume(_, _)),
-    "graph_sssp_volume" -> (E.graphSsspVolume(_, _)),
-    "graph_ppr"         -> (E.graphPpr(_, _)),
-    "graph_cc"          -> (E.graphCc(_, _)),
-    "graph_scc"         -> (E.graphScc(_, _)),
-    "graph_scc_volume"  -> (E.graphSccVolume(_, _)),
-    "graph_kcore_volume" -> (E.graphKcoreVolume(_, _)),
-    "graph_lpa_volume"  -> (E.graphLpaVolume(_, _)),
-    "graph_triangles_volume" -> (E.graphTrianglesVolume(_, _)),
-    "graph_sssp"        -> (E.graphSssp(_, _)),
-    "graph_reciprocity" -> (E.graphReciprocity(_, _)),
-    "corpus_novelty"    -> (E.corpusNovelty(_, _)),
-    "corpus_dup_hist"   -> (E.corpusDupHist(_, _)),
-    "graph_harmonic"    -> (E.graphHarmonic(_, _)),
-    "graph_harmonic_hll" -> (E.graphHarmonicHll(_, _)),
-    "graph_nf"          -> (E.graphNf(_, _)),
-    "graph_nf_hll"      -> (E.graphNfHll(_, _)),
-    "graph_triangles"   -> (E.graphTriangles(_, _)),
-    "graph_clustering"  -> (E.graphClustering(_, _)),
-    "graph_linkpred"    -> (E.graphLinkpred(_, _)),
-    "graph_linkpred_volume" -> (E.graphLinkpredVolume(_, _)),
-    "graph_kcore"       -> (E.graphKcore(_, _)),
-    "graph_lpa"         -> (E.graphLpa(_, _)),
-    "graph_coaccess"    -> (E.graphCoaccess(_, _)),
-    "graph_betweenness" -> (E.graphBetweenness(_, _)),
-    "graph_betweenness_volume" -> (E.graphBetweennessVolume(_, _)),
-    // temporal warehouse maintenance: SCD2 validity ranges, interval algebra
-    "scd2_history"      -> (E.scd2History(_, _)),
-    "scd2_merge"        -> (E.scd2Merge(_, _)),
-    "scd2_lookup"       -> (E.scd2Lookup(_, _)),
-    "events_anomaly"    -> (E.eventsAnomaly(_, _)),
-    "events_retention"  -> (E.eventsRetention(_, _)),
-    "events_retention_weekly" -> (E.eventsRetentionWeekly(_, _)),
-    "events_stickiness" -> (E.eventsStickiness(_, _)),
-    "events_changepoint" -> (E.eventsChangepoint(_, _)),
-    "interval_merge"    -> (E.intervalMerge(_, _)),
-    "interval_join"     -> (E.intervalJoin(_, _)),
-    "dq_drift"          -> (E.dqDrift(_, _)),
-    "cdc_apply"         -> (E.cdcApply(_, _)),
-    "cdc_apply_stored"  -> (E.cdcApplyStored(_, _)),
-    "cdc_compact_rewrite" -> (E.cdcCompactRewrite(_, _)),
-    "cdc_time_travel"   -> (E.cdcTimeTravel(_, _)),
-    "layout_compact_stored" -> (E.layoutCompactStored(_, _)),
-    "layout_zonemap_stored" -> (E.layoutZonemapStored(_, _)),
-    "index_inverted_stored" -> (E.indexInvertedStored(_, _)),
-    "index_bm25_probe"  -> (E.indexBm25Probe(_, _)),
-    "index_phrase_probe" -> (E.indexPhraseProbe(_, _)),
-    "index_bm25_phrase" -> (E.indexBm25Phrase(_, _)),
-    "index_inverted_delta" -> (E.indexInvertedDelta(_, _)),
-    "index_trgm_probe"  -> (E.indexTrgmProbe(_, _)),
-    "dq_expectations"   -> (E.dqExpectations(_, _)),
-    "emb_knn_graph"     -> (E.embKnnGraph(_, _)),
-    "emb_mmr"           -> (E.embMmr(_, _)),
-    "emb_pca_power"     -> (E.embPcaPower(_, _)),
-    "emb_trunc_recall"  -> (E.embTruncRecall(_, _)),
-    // §2.7 streaming operators, drained to deterministic batch shapes
-    "stream_session"    -> (SQ.streamSession(_, _)),
-    "stream_session_native" -> (SQ.streamSessionNative(_, _)),
-    "stream_dedup"      -> (SQ.streamDedup(_, _)),
-    "stream_join"       -> (SQ.streamJoin(_, _)),
-    "stream_join_outer" -> (SQ.streamJoinOuter(_, _)),
-    "stream_window"     -> (SQ.streamWindow(_, _)),
-    "stream_retention"  -> (SQ.streamRetention(_, _)),
-    "stream_changepoint" -> (SQ.streamChangepoint(_, _)),
-    "stream_drift"      -> (SQ.streamDrift(_, _)),
-    "stream_window_append" -> (SQ.streamWindowAppend(_, _)),
-    "stream_funnel"     -> (SQ.streamFunnel(_, _)),
-    "stream_topk"       -> (SQ.streamTopK(_, _)),
-    "stream_asof"       -> (SQ.streamAsof(_, _)),
-    "stream_interval"   -> (SQ.streamInterval(_, _)),
-    "stream_decontam"   -> (SQ.streamDecontam(_, _)),
-    "stream_minhash"    -> (SQ.streamMinhash(_, _)),
-    "stream_cdc"        -> (SQ.streamCdc(_, _)),
-    "stream_scd"        -> (SQ.streamScd(_, _)),
-    "stream_hll_daily"  -> (SQ.streamHllDaily(_, _)),
-    "stream_curate"     -> (SQ.streamCurate(_, _)),
-    "stream_classify"   -> (SQ.streamClassify(_, _)),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_derived_key"    -> O.q1DerivedKey,
-    "q2_anti_join"      -> O.q2AntiJoin,
-    "q3_dim_join"       -> O.q3DimJoin,
-    "q4_scalar_subquery" -> O.q4ScalarSubquery,
-    "q5_groupby_agg"    -> O.q5GroupbyAgg,
-    "q6_distinct"       -> O.q6Distinct,
-    "q6b_distinct_values" -> O.q6bDistinctValues,
-    "q7_rollup"         -> O.q7Rollup,
-    "q8_approx_distinct" -> O.q8ApproxDistinct,
-    "q9_window_rank"    -> O.q9WindowRank,
-    "q10_window_frame"  -> O.q10WindowFrame,
-    "q11_topk"          -> O.q11TopK,
-    "q12_setops"        -> O.q12SetOps,
-    "q13_semi_join"     -> O.q13SemiJoin,
-    "q14_range_join"    -> O.q14RangeJoin,
-    "q15_phone_regex"   -> O.q15PhoneRegex,
-    "q16_date_json"     -> O.q16DateJson,
-    "q17_cross_join"    -> O.q17CrossJoin,
-    "q18_tumbling_day"  -> O.q18TumblingDay,
-    "q19_grouping_sets" -> O.q19GroupingSets,
-    "q20_cosine_topk"   -> O.q20CosineTopk,
-    "q21_array_ops"     -> O.q21ArrayOps,
-    "q22_asof_join"     -> O.q22AsofJoin,
-    "q23_sessionize"    -> O.q23Sessionize,
-    "q24_percentiles"   -> O.q24Percentiles,
-    "q24b_approx_percentiles" -> O.q24bApproxPercentiles,
-    "q25_topk_agg"      -> O.q25TopkAgg,
-    "q26_cube"          -> O.q26Cube,
-    "q27_pivot"         -> O.q27Pivot,
-    "q27b_unpivot"      -> O.q27bUnpivot,
-    "q28_window_nav"    -> O.q28WindowNav,
-    "q29_funnel"        -> O.q29Funnel,
-    "q30_full_outer"    -> O.q30FullOuter,
-    "q31_correlated"    -> O.q31Correlated,
-    "q32_recursive"     -> O.q32Recursive,
-    "q33_graph_walk"    -> O.q33GraphWalk,
-    "q34_range_frame"   -> O.q34RangeFrame,
-    "q35_window_distinct" -> O.q35WindowDistinct,
-    "q36_ntile"         -> O.q36Ntile,
-    "q37_gap_fill"      -> O.q37GapFill,
-    // deterministic extension ops; sketch/LSH ops are rows-only
-    "dedup_exact"       -> EO.dedupExact,
-    "dedup_url"         -> EO.dedupUrl,
-    "domain_quota"      -> EO.domainQuota,
-    "dedup_substring"   -> EO.dedupSubstring,
-    "text_ngrams"       -> EO.textNgrams,
-    "text_pmi"          -> EO.textPmi,
-    "text_heavy_hitters" -> EO.textHeavyHitters,
-    "events_hll_daily"  -> EO.eventsHllDaily,
-    "dedup_jaccard"     -> EO.dedupJaccard,
-    "dedup_containment" -> EO.dedupContainment,
-    "dedup_jaccard_char" -> EO.dedupJaccardChar,
-    "dedup_minhash"     -> EO.dedupMinhash,
-    "dedup_minhash_clusters" -> EO.dedupMinhashClusters,
-    "corpus_overlap"    -> EO.corpusOverlap,
-    "dedup_simhash"     -> EO.dedupSimhash,
-    "dedup_embedding"   -> EO.dedupEmbedding,
-    "dedup_minhash_verify" -> EO.dedupMinhashVerify,
-    "corpus_incremental" -> EO.corpusIncremental,
-    "dedup_semantic"    -> EO.dedupSemantic,
-    "ann_lsh_topk"      -> EO.annExactTop10,
-    "ann_ivf_topk"      -> EO.annExactTop10,
-    "ann_ivf_kmeans"    -> EO.annExactTop10,
+    Declared("dedup_exact", E.dedupExact(_, _), Some(EO.dedupExact)),
+    Declared("dedup_url", E.dedupUrl(_, _), Some(EO.dedupUrl)),
+    Declared("domain_quota", E.domainQuota(_, _), Some(EO.domainQuota)),
+    Declared("dedup_substring", E.dedupSubstring(_, _), Some(EO.dedupSubstring)),
+    Declared("text_ngrams", E.textNgrams(_, _), Some(EO.textNgrams)),
+    Declared("text_pmi", E.textPmi(_, _), Some(EO.textPmi)),
+    Declared("text_heavy_hitters", E.textHeavyHitters(_, _), Some(EO.textHeavyHitters)),
+    Declared("events_hll_daily", E.eventsHllDaily(_, _), Some(EO.eventsHllDaily)),
+    Declared("dedup_jaccard", E.dedupJaccard(_, _), Some(EO.dedupJaccard)),
+    Declared("dedup_containment", E.dedupContainment(_, _), Some(EO.dedupContainment)),
+    Declared("dedup_jaccard_char", E.dedupJaccardChar(_, _), Some(EO.dedupJaccardChar)),
+    Declared("dedup_minhash", E.dedupMinhash(_, _), Some(EO.dedupMinhash)),
+    Declared("dedup_minhash_clusters", E.dedupMinhashClusters(_, _), Some(EO.dedupMinhashClusters)),
+    Declared("corpus_overlap", E.corpusOverlap(_, _), Some(EO.corpusOverlap)),
+    Declared("dedup_minhash_verify", E.dedupMinhashVerify(_, _), Some(EO.dedupMinhashVerify)),
+    Declared("corpus_incremental", E.corpusIncremental(_, _), Some(EO.corpusIncremental)),
+    Declared("dedup_simhash", E.dedupSimhash(_, _), Some(EO.dedupSimhash)),
+    Declared("dedup_embedding", E.dedupEmbedding(_, _), Some(EO.dedupEmbedding)),
+    Declared("dedup_semantic", E.dedupSemantic(_, _), Some(EO.dedupSemantic)),
+    Declared("ann_lsh_topk", E.annLsh(_, _), Some(EO.annExactTop10)),
+    Declared("ann_ivf_topk", E.annIvf(_, _), Some(EO.annExactTop10)),
+    Declared("ann_ivf_stored", E.annIvfStored(_, _), None),
     // shared VERBATIM with the exact twin — merge-on-read freshness gate
-    "ann_ivf_delta"     -> EO.annExactTop10,
-    "ann_ivfpq_topk"    -> EO.annExactTop10,
-    "ann_filtered"      -> EO.annFilteredExact,
-    "ann_q8_topk"       -> EO.annQ8,
-    "ann_q8_range"      -> EO.annQ8Range,
-    "corpus_split"      -> EO.corpusSplit,
-    "corpus_sample"     -> EO.corpusSample,
-    "corpus_reservoir"  -> EO.corpusReservoir,
-    "corpus_leakage"    -> EO.corpusLeakage,
-    "corpus_pack"       -> EO.corpusPack,
-    "corpus_interleave" -> EO.corpusInterleave,
-    "corpus_mix"        -> EO.corpusMix,
-    "corpus_decontam"   -> EO.corpusDecontam,
+    Declared("ann_ivf_delta", E.annIvfDelta(_, _), Some(EO.annExactTop10)),
+    Declared("ann_ivf_kmeans", E.annIvfKmeans(_, _), Some(EO.annExactTop10)),
+    Declared("ann_filtered", E.annFiltered(_, _), Some(EO.annFilteredExact)),
+    Declared("ann_ivfpq_topk", E.annIvfPq(_, _), Some(EO.annExactTop10)),
+    Declared("ann_knn_join", E.annKnnJoin(_, _), None),
+    Declared("emb_quantize", E.embQuantize(_, _), Some(EO.embQuantize)),
+    Declared("emb_centroid", E.embCentroid(_, _), Some(EO.embCentroid)),
+    Declared("emb_classify", E.embClassify(_, _), Some(EO.embClassify)),
+    Declared("ann_q8_topk", E.annQ8(_, _), Some(EO.annQ8)),
+    Declared("ann_q8_range", E.annQ8Range(_, _), Some(EO.annQ8Range)),
+    Declared("corpus_split", E.corpusSplit(_, _), Some(EO.corpusSplit)),
+    Declared("corpus_sample", E.corpusSample(_, _), Some(EO.corpusSample)),
+    Declared("corpus_reservoir", E.corpusReservoir(_, _), Some(EO.corpusReservoir)),
+    Declared("corpus_leakage", E.corpusLeakage(_, _), Some(EO.corpusLeakage)),
+    Declared("corpus_pack", E.corpusPack(_, _), Some(EO.corpusPack)),
+    Declared("corpus_interleave", E.corpusInterleave(_, _), Some(EO.corpusInterleave)),
+    Declared("corpus_mix", E.corpusMix(_, _), Some(EO.corpusMix)),
+    Declared("corpus_decontam", E.corpusDecontam(_, _), Some(EO.corpusDecontam)),
     // the Bloom prefilter is exact-preserving, so the bloom path must
     // match the SAME oracle SQL bit for bit — sharing the string keeps
     // the two paths from drifting apart
-    "corpus_decontam_bloom" -> EO.corpusDecontam,
-    "corpus_chunk"      -> EO.corpusChunk,
-    "corpus_offsets"    -> EO.corpusOffsets,
-    "corpus_shard"      -> EO.corpusShard,
-    "corpus_token_budget" -> EO.corpusTokenBudget,
-    "corpus_hist"       -> EO.corpusHist,
-    "corpus_stats"      -> EO.corpusStats,
-    "layout_zorder"     -> EO.layoutZorder,
-    "layout_hilbert"    -> EO.layoutHilbert,
-    "layout_hilbert_stored" -> EO.layoutHilbertStored,
-    "layout_zorder_stored" -> EO.layoutZorderStored,
-    "line_dedup"        -> EO.lineDedup,
-    "corpus_curate"     -> EO.corpusCurate,
-    "corpus_curate2"    -> EO.corpusCurate2,
-    "corpus_curate3"    -> EO.corpusCurate3,
-    "corpus_curate4"    -> EO.corpusCurate4,
-    "emb_quantize"      -> EO.embQuantize,
-    "emb_centroid"      -> EO.embCentroid,
-    "emb_classify"      -> EO.embClassify,
-    "text_tokens"       -> EO.textTokens,
-    "text_langid"       -> EO.textLangid,
-    "text_tfidf"        -> EO.textTfidf,
-    "text_bm25"         -> EO.textBm25,
-    "retrieve_hybrid"   -> EO.retrieveHybrid,
-    "emb_hard_negatives" -> EO.embHardNegatives,
-    "text_redact"       -> EO.textRedact,
-    "text_repetition"   -> EO.textRepetition,
-    "text_familiarity"  -> EO.textFamiliarity,
-    "text_lm_bigram"    -> EO.textLmBigram,
-    "text_lm_trigram"   -> EO.textLmTrigram,
-    "text_script"       -> EO.textScript,
-    "text_gopher"       -> EO.textGopher,
-    "text_winnow"       -> EO.textWinnow,
-    "url_filter"        -> EO.urlFilter,
-    "url_robots"        -> EO.urlRobots,
-    "text_quality"      -> EO.textQuality,
-    "mm_bytes"          -> EO.mmBytes,
-    "mm_decode"         -> EO.mmDecode,
-    "mm_frames"         -> EO.mmFrames,
-    "mm_resize"         -> EO.mmResize,
-    "mm_audio"          -> EO.mmAudio,
-    "mm_pcm"            -> EO.mmPcm,
-    "mm_video"          -> EO.mmVideo,
-    "mm_video_frames"   -> EO.mmVideoFrames,
-    "mm_video_sample"   -> EO.mmVideoSample,
-    "mm_video_dedup"    -> EO.mmVideoDedup,
-    "mm_video_phash"    -> EO.mmVideoPhash,
-    "mm_video_scene"    -> EO.mmVideoScene,
-    "mm_audio_scene"    -> EO.mmAudioScene,
-    "mm_audio_dedup"    -> EO.mmAudioDedup,
-    "mm_audio_fp"       -> EO.mmAudioFp,
-    "mm_audio_neardup"  -> EO.mmAudioNeardup,
-    "mm_image_dedup"    -> EO.mmImageDedup,
-    "mm_image_phash"    -> EO.mmImagePhash,
-    "mm_image_neardup"  -> EO.mmImageNeardup,
-    "mm_census"         -> EO.mmCensus,
-    "mm_curate"         -> EO.mmCurate,
-    "skew_join"         -> EO.skewJoin,
-    "bucketed_join"     -> EO.bucketedJoin,
-    "graph_pagerank"    -> EO.graphPagerank,
-    "graph_hits"        -> EO.graphHits,
-    "graph_modularity"  -> EO.graphModularity,
-    "graph_conductance" -> EO.graphConductance,
-    "graph_modularity_volume" -> EO.graphModularityVolume,
-    "graph_hits_volume" -> EO.graphHitsVolume,
-    "graph_pagerank_wide" -> EO.graphPagerank,
-    "graph_pagerank_weighted" -> EO.graphPagerankWeighted,
-    "graph_pagerank_volume" -> EO.graphPagerankVolume,
-    "graph_ppr_volume"  -> EO.graphPprVolume,
-    "graph_pagerank_weighted_volume" -> EO.graphPagerankWeightedVolume,
-    "graph_cc_volume"   -> EO.graphCcVolume,
-    "graph_sssp_volume" -> EO.graphSsspVolume,
-    "graph_ppr"         -> EO.graphPpr,
-    "graph_cc"          -> EO.graphCc,
-    "graph_scc"         -> EO.graphScc,
-    "graph_scc_volume"  -> EO.graphSccVolume,
-    "graph_kcore_volume" -> EO.graphKcoreVolume,
-    "graph_lpa_volume"  -> EO.graphLpaVolume,
-    "graph_triangles_volume" -> EO.graphTrianglesVolume,
-    "graph_sssp"        -> EO.graphSssp,
-    "graph_reciprocity" -> EO.graphReciprocity,
-    "corpus_novelty"    -> EO.corpusNovelty,
-    "corpus_dup_hist"   -> EO.corpusDupHist,
-    "graph_harmonic"    -> EO.graphHarmonic,
-    "graph_harmonic_hll" -> EO.graphHarmonicHll,
-    "graph_nf"          -> EO.graphNf,
-    "graph_nf_hll"      -> EO.graphNfHll,
-    "graph_triangles"   -> EO.graphTriangles,
-    "graph_clustering"  -> EO.graphClustering,
-    "graph_linkpred"    -> EO.graphLinkpred,
-    "graph_linkpred_volume" -> EO.graphLinkpredVolume,
-    "graph_kcore"       -> EO.graphKcore,
-    "graph_lpa"         -> EO.graphLpa,
-    "graph_coaccess"    -> EO.graphCoaccess,
-    "graph_betweenness" -> EO.graphBetweenness,
-    "graph_betweenness_volume" -> EO.graphBetweennessVolume,
-    "scd2_history"      -> EO.scd2History,
+    Declared("corpus_decontam_bloom", E.corpusDecontamBloom(_, _), Some(EO.corpusDecontam)),
+    Declared("corpus_chunk", E.corpusChunk(_, _), Some(EO.corpusChunk)),
+    Declared("corpus_offsets", E.corpusOffsets(_, _), Some(EO.corpusOffsets)),
+    Declared("corpus_shard", E.corpusShard(_, _), Some(EO.corpusShard)),
+    Declared("corpus_token_budget", E.corpusTokenBudget(_, _), Some(EO.corpusTokenBudget)),
+    Declared("corpus_hist", E.corpusHist(_, _), Some(EO.corpusHist)),
+    Declared("corpus_stats", E.corpusStats(_, _), Some(EO.corpusStats)),
+    Declared("layout_zorder", E.layoutZorder(_, _), Some(EO.layoutZorder)),
+    Declared("layout_hilbert", E.layoutHilbert(_, _), Some(EO.layoutHilbert)),
+    Declared("layout_hilbert_stored", E.layoutHilbertStored(_, _), Some(EO.layoutHilbertStored)),
+    Declared("layout_zorder_stored", E.layoutZorderStored(_, _), Some(EO.layoutZorderStored)),
+    Declared("line_dedup", E.lineDedup(_, _), Some(EO.lineDedup)),
+    Declared("corpus_curate", E.corpusCurate(_, _), Some(EO.corpusCurate)),
+    Declared("corpus_curate2", E.corpusCurate2(_, _), Some(EO.corpusCurate2)),
+    Declared("corpus_curate3", E.corpusCurate3(_, _), Some(EO.corpusCurate3)),
+    Declared("corpus_curate4", E.corpusCurate4(_, _), Some(EO.corpusCurate4)),
+    Declared("text_tokens", E.textTokens(_, _), Some(EO.textTokens)),
+    Declared("text_quality", E.textQuality(_, _), Some(EO.textQuality)),
+    Declared("text_langid", E.textLangid(_, _), Some(EO.textLangid)),
+    Declared("text_tfidf", E.textTfidf(_, _), Some(EO.textTfidf)),
+    Declared("text_bm25", E.textBm25(_, _), Some(EO.textBm25)),
+    Declared("retrieve_hybrid", E.retrieveHybrid(_, _), Some(EO.retrieveHybrid)),
+    Declared("emb_hard_negatives", E.embHardNegatives(_, _), Some(EO.embHardNegatives)),
+    Declared("text_redact", E.textRedact(_, _), Some(EO.textRedact)),
+    Declared("text_repetition", E.textRepetition(_, _), Some(EO.textRepetition)),
+    Declared("text_familiarity", E.textFamiliarity(_, _), Some(EO.textFamiliarity)),
+    Declared("text_lm_bigram", E.textLmBigram(_, _), Some(EO.textLmBigram)),
+    Declared("text_lm_trigram", E.textLmTrigram(_, _), Some(EO.textLmTrigram)),
+    Declared("bpe_tokens", E.bpeTokens(_, _), None),
+    Declared("text_compress", E.textCompress(_, _), None),
+    Declared("text_script", E.textScript(_, _), Some(EO.textScript)),
+    Declared("text_gopher", E.textGopher(_, _), Some(EO.textGopher)),
+    Declared("url_filter", E.urlFilter(_, _), Some(EO.urlFilter)),
+    Declared("url_robots", E.urlRobots(_, _), Some(EO.urlRobots)),
+    Declared("text_fingerprint", E.textFingerprint(_, _), None),
+    Declared("text_winnow", E.textWinnow(_, _), Some(EO.textWinnow)),
+    Declared("mm_bytes", E.mmBytes(_, _), Some(EO.mmBytes)),
+    Declared("mm_decode", E.mmDecode(_, _), Some(EO.mmDecode)),
+    Declared("mm_frames", E.mmFrames(_, _), Some(EO.mmFrames)),
+    Declared("mm_resize", E.mmResize(_, _), Some(EO.mmResize)),
+    Declared("mm_audio", E.mmAudio(_, _), Some(EO.mmAudio)),
+    Declared("mm_pcm", E.mmPcm(_, _), Some(EO.mmPcm)),
+    Declared("mm_video", E.mmVideo(_, _), Some(EO.mmVideo)),
+    Declared("mm_video_frames", E.mmVideoFrames(_, _), Some(EO.mmVideoFrames)),
+    Declared("mm_video_sample", E.mmVideoSample(_, _), Some(EO.mmVideoSample)),
+    Declared("mm_video_dedup", E.mmVideoDedup(_, _), Some(EO.mmVideoDedup)),
+    Declared("mm_video_phash", E.mmVideoPhash(_, _), Some(EO.mmVideoPhash)),
+    Declared("mm_video_scene", E.mmVideoScene(_, _), Some(EO.mmVideoScene)),
+    Declared("mm_audio_scene", E.mmAudioScene(_, _), Some(EO.mmAudioScene)),
+    Declared("mm_audio_dedup", E.mmAudioDedup(_, _), Some(EO.mmAudioDedup)),
+    Declared("mm_audio_fp", E.mmAudioFp(_, _), Some(EO.mmAudioFp)),
+    Declared("mm_audio_neardup", E.mmAudioNeardup(_, _), Some(EO.mmAudioNeardup)),
+    Declared("mm_image_dedup", E.mmImageDedup(_, _), Some(EO.mmImageDedup)),
+    Declared("mm_image_phash", E.mmImagePhash(_, _), Some(EO.mmImagePhash)),
+    Declared("mm_image_neardup", E.mmImageNeardup(_, _), Some(EO.mmImageNeardup)),
+    Declared("mm_census", E.mmCensus(_, _), Some(EO.mmCensus)),
+    Declared("mm_curate", E.mmCurate(_, _), Some(EO.mmCurate)),
+    // scale utilities on the declared surface: salt-invariant skew join,
+    // layout-invariant bucketed join (zero-Exchange plan in PlanAuditSpec)
+    Declared("skew_join", E.skewJoin(_, _), Some(EO.skewJoin)),
+    Declared("bucketed_join", E.bucketedJoin(_, _), Some(EO.bucketedJoin)),
+    // iterative BSP graph computation (fixed-point integer PageRank,
+    // min-label connected components)
+    Declared("graph_pagerank", E.graphPagerank(_, _), Some(EO.graphPagerank)),
+    Declared("graph_hits", E.graphHits(_, _), Some(EO.graphHits)),
+    Declared("graph_modularity", E.graphModularity(_, _), Some(EO.graphModularity)),
+    Declared("graph_conductance", E.graphConductance(_, _), Some(EO.graphConductance)),
+    Declared("graph_modularity_volume", E.graphModularityVolume(_, _),
+      Some(EO.graphModularityVolume)),
+    Declared("graph_hits_volume", E.graphHitsVolume(_, _), Some(EO.graphHitsVolume)),
+    Declared("graph_pagerank_wide", E.graphPagerankWide(_, _), Some(EO.graphPagerank)),
+    Declared("graph_pagerank_weighted", E.graphPagerankWeighted(_, _),
+      Some(EO.graphPagerankWeighted)),
+    Declared("graph_pagerank_volume", E.graphPagerankVolume(_, _), Some(EO.graphPagerankVolume)),
+    Declared("graph_ppr_volume", E.graphPprVolume(_, _), Some(EO.graphPprVolume)),
+    Declared("graph_pagerank_weighted_volume", E.graphPagerankWeightedVolume(_, _),
+      Some(EO.graphPagerankWeightedVolume)),
+    Declared("graph_cc_volume", E.graphCcVolume(_, _), Some(EO.graphCcVolume)),
+    Declared("graph_sssp_volume", E.graphSsspVolume(_, _), Some(EO.graphSsspVolume)),
+    Declared("graph_ppr", E.graphPpr(_, _), Some(EO.graphPpr)),
+    Declared("graph_cc", E.graphCc(_, _), Some(EO.graphCc)),
+    Declared("graph_scc", E.graphScc(_, _), Some(EO.graphScc)),
+    Declared("graph_scc_volume", E.graphSccVolume(_, _), Some(EO.graphSccVolume)),
+    Declared("graph_kcore_volume", E.graphKcoreVolume(_, _), Some(EO.graphKcoreVolume)),
+    Declared("graph_lpa_volume", E.graphLpaVolume(_, _), Some(EO.graphLpaVolume)),
+    Declared("graph_triangles_volume", E.graphTrianglesVolume(_, _), Some(EO.graphTrianglesVolume)),
+    Declared("graph_sssp", E.graphSssp(_, _), Some(EO.graphSssp)),
+    Declared("graph_reciprocity", E.graphReciprocity(_, _), Some(EO.graphReciprocity)),
+    Declared("corpus_novelty", E.corpusNovelty(_, _), Some(EO.corpusNovelty)),
+    Declared("corpus_dup_hist", E.corpusDupHist(_, _), Some(EO.corpusDupHist)),
+    Declared("graph_harmonic", E.graphHarmonic(_, _), Some(EO.graphHarmonic)),
+    Declared("graph_harmonic_hll", E.graphHarmonicHll(_, _), Some(EO.graphHarmonicHll)),
+    Declared("graph_nf", E.graphNf(_, _), Some(EO.graphNf)),
+    Declared("graph_nf_hll", E.graphNfHll(_, _), Some(EO.graphNfHll)),
+    Declared("graph_triangles", E.graphTriangles(_, _), Some(EO.graphTriangles)),
+    Declared("graph_clustering", E.graphClustering(_, _), Some(EO.graphClustering)),
+    Declared("graph_linkpred", E.graphLinkpred(_, _), Some(EO.graphLinkpred)),
+    Declared("graph_linkpred_volume", E.graphLinkpredVolume(_, _), Some(EO.graphLinkpredVolume)),
+    Declared("graph_kcore", E.graphKcore(_, _), Some(EO.graphKcore)),
+    Declared("graph_lpa", E.graphLpa(_, _), Some(EO.graphLpa)),
+    Declared("graph_coaccess", E.graphCoaccess(_, _), Some(EO.graphCoaccess)),
+    Declared("graph_betweenness", E.graphBetweenness(_, _), Some(EO.graphBetweenness)),
+    Declared("graph_betweenness_volume", E.graphBetweennessVolume(_, _),
+      Some(EO.graphBetweennessVolume)),
+    // temporal warehouse maintenance: SCD2 validity ranges, interval algebra
+    Declared("scd2_history", E.scd2History(_, _), Some(EO.scd2History)),
     // shared VERBATIM with the full rebuild — merge ≡ rebuild is the gate
-    "scd2_merge"        -> EO.scd2History,
-    "scd2_lookup"       -> EO.scd2Lookup,
-    "events_anomaly"    -> EO.eventsAnomaly,
-    "events_retention"  -> EO.eventsRetention,
-    "events_retention_weekly" -> EO.eventsRetentionWeekly,
-    "events_stickiness" -> EO.eventsStickiness,
-    "events_changepoint" -> EO.eventsChangepoint,
-    "interval_merge"    -> EO.intervalMerge,
-    "interval_join"     -> EO.intervalJoin,
-    "dq_drift"          -> EO.dqDrift,
-    "cdc_apply"         -> EO.cdcApply,
-    "cdc_apply_stored"  -> EO.cdcApplyStored,
-    "cdc_compact_rewrite" -> EO.cdcApplyStored,
-    "cdc_time_travel"   -> EO.cdcTimeTravel,
-    "layout_compact_stored" -> EO.layoutCompactStored,
-    "layout_zonemap_stored" -> EO.layoutZonemapStored,
-    "index_inverted_stored" -> EO.indexInvertedStored,
-    "index_bm25_probe"  -> EO.indexBm25Probe,
-    "index_phrase_probe" -> EO.indexPhraseProbe,
-    "index_bm25_phrase" -> EO.indexBm25Phrase,
+    Declared("scd2_merge", E.scd2Merge(_, _), Some(EO.scd2History)),
+    Declared("scd2_lookup", E.scd2Lookup(_, _), Some(EO.scd2Lookup)),
+    Declared("events_anomaly", E.eventsAnomaly(_, _), Some(EO.eventsAnomaly)),
+    Declared("events_retention", E.eventsRetention(_, _), Some(EO.eventsRetention)),
+    Declared("events_retention_weekly", E.eventsRetentionWeekly(_, _),
+      Some(EO.eventsRetentionWeekly)),
+    Declared("events_stickiness", E.eventsStickiness(_, _), Some(EO.eventsStickiness)),
+    Declared("events_changepoint", E.eventsChangepoint(_, _), Some(EO.eventsChangepoint)),
+    Declared("interval_merge", E.intervalMerge(_, _), Some(EO.intervalMerge)),
+    Declared("interval_join", E.intervalJoin(_, _), Some(EO.intervalJoin)),
+    Declared("dq_drift", E.dqDrift(_, _), Some(EO.dqDrift)),
+    Declared("cdc_apply", E.cdcApply(_, _), Some(EO.cdcApply)),
+    Declared("cdc_apply_stored", E.cdcApplyStored(_, _), Some(EO.cdcApplyStored)),
+    Declared("cdc_compact_rewrite", E.cdcCompactRewrite(_, _), Some(EO.cdcApplyStored)),
+    Declared("cdc_time_travel", E.cdcTimeTravel(_, _), Some(EO.cdcTimeTravel)),
+    Declared("layout_compact_stored", E.layoutCompactStored(_, _), Some(EO.layoutCompactStored)),
+    Declared("layout_zonemap_stored", E.layoutZonemapStored(_, _), Some(EO.layoutZonemapStored)),
+    Declared("index_inverted_stored", E.indexInvertedStored(_, _), Some(EO.indexInvertedStored)),
+    Declared("index_bm25_probe", E.indexBm25Probe(_, _), Some(EO.indexBm25Probe)),
+    Declared("index_phrase_probe", E.indexPhraseProbe(_, _), Some(EO.indexPhraseProbe)),
+    Declared("index_bm25_phrase", E.indexBm25Phrase(_, _), Some(EO.indexBm25Phrase)),
     // shared VERBATIM with the full-index probe — merge-on-read ≡ full is the gate
-    "index_inverted_delta" -> EO.indexInvertedStored,
-    "index_trgm_probe"  -> EO.indexTrgmProbe,
-    "dq_expectations"   -> EO.dqExpectations,
-    "emb_knn_graph"     -> EO.embKnnGraph,
-    "emb_mmr"           -> EO.embMmr,
-    "emb_pca_power"     -> EO.embPcaPower,
-    "emb_trunc_recall"  -> EO.embTruncRecall,
-    "stream_asof"       -> SO.streamAsof,
-    "stream_interval"   -> SO.streamInterval,
-    "stream_session"    -> SO.streamSession,
-    "stream_session_native" -> SO.streamSessionNative,
-    "stream_dedup"      -> SO.streamDedup,
-    "stream_join"       -> SO.streamJoin,
-    "stream_join_outer" -> SO.streamJoinOuter,
-    "stream_window"     -> SO.streamWindow,
+    Declared("index_inverted_delta", E.indexInvertedDelta(_, _), Some(EO.indexInvertedStored)),
+    Declared("index_trgm_probe", E.indexTrgmProbe(_, _), Some(EO.indexTrgmProbe)),
+    Declared("dq_expectations", E.dqExpectations(_, _), Some(EO.dqExpectations)),
+    Declared("emb_knn_graph", E.embKnnGraph(_, _), Some(EO.embKnnGraph)),
+    Declared("emb_mmr", E.embMmr(_, _), Some(EO.embMmr)),
+    Declared("emb_pca_power", E.embPcaPower(_, _), Some(EO.embPcaPower)),
+    Declared("emb_trunc_recall", E.embTruncRecall(_, _), Some(EO.embTruncRecall)),
+    // §2.7 streaming operators, drained to deterministic batch shapes
+    Declared("stream_session", SQ.streamSession(_, _), Some(SO.streamSession)),
+    Declared("stream_session_native", SQ.streamSessionNative(_, _), Some(SO.streamSessionNative)),
+    Declared("stream_dedup", SQ.streamDedup(_, _), Some(SO.streamDedup)),
+    Declared("stream_join", SQ.streamJoin(_, _), Some(SO.streamJoin)),
+    Declared("stream_join_outer", SQ.streamJoinOuter(_, _), Some(SO.streamJoinOuter)),
+    Declared("stream_window", SQ.streamWindow(_, _), Some(SO.streamWindow)),
     // shared VERBATIM with the batch twin — drain ≡ batch is the gate
-    "stream_retention"  -> EO.eventsRetention,
+    Declared("stream_retention", SQ.streamRetention(_, _), Some(EO.eventsRetention)),
     // shared VERBATIM with the batch twin — drain ≡ batch is the gate
-    "stream_changepoint" -> EO.eventsChangepoint,
-    "stream_drift"      -> EO.dqDrift,
-    "stream_window_append" -> SO.streamWindowAppend,
-    "stream_funnel"     -> SO.streamFunnel,
-    "stream_topk"       -> SO.streamTopK,
-    "stream_decontam"   -> SO.streamDecontam,
-    "stream_minhash"    -> SO.streamMinhash,
-    "stream_cdc"        -> EO.cdcApply,
-    "stream_scd"        -> SO.streamScd,
-    "stream_hll_daily"  -> SO.streamHllDaily,
-    "stream_curate"     -> SO.streamCurate,
-    "stream_classify"   -> EO.embClassify,
+    Declared("stream_changepoint", SQ.streamChangepoint(_, _), Some(EO.eventsChangepoint)),
+    Declared("stream_drift", SQ.streamDrift(_, _), Some(EO.dqDrift)),
+    Declared("stream_window_append", SQ.streamWindowAppend(_, _), Some(SO.streamWindowAppend)),
+    Declared("stream_funnel", SQ.streamFunnel(_, _), Some(SO.streamFunnel)),
+    Declared("stream_topk", SQ.streamTopK(_, _), Some(SO.streamTopK)),
+    Declared("stream_asof", SQ.streamAsof(_, _), Some(SO.streamAsof)),
+    Declared("stream_interval", SQ.streamInterval(_, _), Some(SO.streamInterval)),
+    Declared("stream_decontam", SQ.streamDecontam(_, _), Some(SO.streamDecontam)),
+    Declared("stream_minhash", SQ.streamMinhash(_, _), Some(SO.streamMinhash)),
+    Declared("stream_cdc", SQ.streamCdc(_, _), Some(EO.cdcApply)),
+    Declared("stream_scd", SQ.streamScd(_, _), Some(SO.streamScd)),
+    Declared("stream_hll_daily", SQ.streamHllDaily(_, _), Some(SO.streamHllDaily)),
+    Declared("stream_curate", SQ.streamCurate(_, _), Some(SO.streamCurate)),
+    Declared("stream_classify", SQ.streamClassify(_, _), Some(EO.embClassify)),
   )
+
+  /** Name → declaration; a name declared twice fails here, at first use
+    * of the registry, instead of one silently shadowing the other. */
+  private[graft] def index(ds: Seq[Declared]): Map[String, Declared] = {
+    val repeated = ds.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(repeated.isEmpty,
+      s"query names declared more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    ds.map(d => d.name -> d).toMap
+  }
+
+  private lazy val byName: Map[String, Declared] = index(declared)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, d) => n -> d.build }
+
+  lazy val oracleSql: Map[String, String] =
+    byName.collect { case (n, Declared(_, _, Some(sql))) => n -> sql }
 }

@@ -25,18 +25,6 @@ import graft.sources.Ingest
   */
 object Main {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private val usage =
     """usage: ingest <cities.txt> <categories.txt> <fixtureDir> <outDir> [scrapeDate]
       |       etl <raw.jsonl> <site_dim.csv> <outDir> [--jdbc-url U [--jdbc-table T]]
@@ -185,15 +173,5 @@ object Main {
     case _ => throw new IllegalArgumentException(usage)
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = session()
-    try run(args.toList, spark)
-    catch {
-      case e: IllegalArgumentException =>
-        System.err.println(e.getMessage)
-        spark.stop()
-        sys.exit(2)
-    }
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit = graft.Harness.runMain(args)(run)
 }

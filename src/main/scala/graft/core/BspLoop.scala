@@ -34,10 +34,9 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
   * or a cluster constant. AQE is restored (and re-applies to whatever
   * the caller builds on the result) as soon as the loop exits.
   *
-  * The pinned width can be overridden for one-off experiments with
-  * `spark.graft.loop.shufflePartitions` (unset = derive from inputs);
   * `spark.graft.loop.aqe=true` keeps AQE on inside loops (the
-  * pre-round-22 behavior) for A/B comparison.
+  * pre-round-22 behavior) for A/B comparison, e.g.
+  * `graft.tools.Lab time --conf spark.graft.loop.aqe=true name…`.
   *
   * Results are unaffected either way: every loop step is a
   * deterministic integer/idempotent fold whose value is independent of
@@ -49,12 +48,12 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
   */
 object BspLoop {
 
-  /** Dev-only step-plan capture (graft.tools.PlanDumpStep): when set,
-    * the loop operators hand each iteration's PRE-checkpoint frame to
-    * the sink as (label, step, frame) — `localCheckpoint` severs the
+  /** Dev-only step-plan capture (`graft.tools.Lab step-plan`): when
+    * set, the loop operators hand each iteration's PRE-checkpoint frame
+    * to the sink as (label, step, frame) — `localCheckpoint` severs the
     * plan, so this is the only point where the per-iteration shape
     * (Exchange count, join strategy) is visible to `explain`. A plain
-    * None check when unset; never set outside the PlanDumpStep tool. */
+    * None check when unset; never set outside that Lab mode. */
   @volatile private[graft] var stepSink: Option[(String, Int, DataFrame) => Unit] = None
 
   private[graft] def capture(label: String, step: Int, df: DataFrame): Unit =
@@ -95,8 +94,14 @@ object BspLoop {
 
   /** Runs `body` (a BSP operator's driver loop) with AQE disabled and
     * `spark.sql.shuffle.partitions` pinned to the max partition count
-    * of `inputs` — the loop's already-materialized frames, whose width
-    * AQE derived from real bytes. Restores both settings on exit. */
+    * of `inputs` — the loop's frames, whose width AQE derived from real
+    * bytes. Restores both settings on exit.
+    *
+    * `inputs` must already be materialized (checkpointed, or a plain
+    * scan): reading the partition count of a lazy frame with a shuffle
+    * in it finalizes its adaptive plan, which runs the upstream stages
+    * as an extra job before the loop starts and pins a width nobody
+    * chose. */
   def pinned[T](spark: SparkSession, inputs: DataFrame*)(body: => T): T = {
     if (spark.conf.getOption("spark.graft.loop.aqe").contains("true")) return body
     require(inputs.nonEmpty, "BspLoop.pinned needs at least one input frame")
@@ -104,9 +109,7 @@ object BspLoop {
     val partKey = "spark.sql.shuffle.partitions"
     val prevAqe = spark.conf.get(aqeKey, "true")
     val prevPart = spark.conf.get(partKey)
-    val width = spark.conf.getOption("spark.graft.loop.shufflePartitions")
-      .map(_.toInt)
-      .getOrElse(math.max(1, inputs.map(_.rdd.getNumPartitions).max))
+    val width = math.max(1, inputs.map(_.rdd.getNumPartitions).max)
     spark.conf.set(aqeKey, "false")
     spark.conf.set(partKey, width.toString)
     try body

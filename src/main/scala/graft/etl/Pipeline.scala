@@ -7,10 +7,12 @@ import org.apache.spark.sql.types._
 import graft.functions.Extract
 
 /** The reference pipeline (SURVEY §3) re-expressed Spark-first:
-  * ingest→dedup (scraper.py:211-218), incremental discovery anti-join
-  * (etl_process.py:297-301), 13-field clean projection (:203-224),
-  * broadcast dim enrichment with inner-join/quarantine semantics
-  * (:320-335), and the optional conform maintenance job (:227-241).
+  * ingest→dedup (scraper.py:211-218), whose anti-join against landed
+  * keys stands in for the incremental discovery of etl_process.py:297-301
+  * (the streaming path re-checks each batch in `EtlStream`), the
+  * 13-field clean projection (:203-224), broadcast dim enrichment with
+  * inner-join/quarantine semantics (:320-335), and the optional conform
+  * maintenance job (:227-241).
   *
   * Scale notes: dedup is one shuffle on uniq_id; enrichment broadcasts
   * the ≤479-row dim so the fact side never shuffles; quarantine is the
@@ -43,14 +45,6 @@ object Pipeline {
       case None     => deduped
     }
   }
-
-  /** Incremental discovery (etl_process.py:297-301): raw rows not yet in
-    * the warehouse. The LIMIT is made deterministic (SURVEY §2.5): the
-    * reference's heap-order LIMIT is nondeterministic.
-    */
-  def discover(raw: DataFrame, clean: DataFrame, batchSize: Int = 50): DataFrame =
-    raw.join(clean.select("uniq_id"), Seq("uniq_id"), "left_anti")
-      .orderBy("uniq_id").limit(batchSize)
 
   /** `clean_data` (etl_process.py:203-224): raw envelope → the 13-field
     * projection, one `select` of the §2.6 expression library. All fields
@@ -112,12 +106,6 @@ object Pipeline {
       .drop("post_date_ts", "scrape_date_ts")
     Enriched(ok, bad)
   }
-
-  /** One full micro-batch: discover → clean → enrich (etl_process.py loop
-    * body :294-335). */
-  def runBatch(raw: DataFrame, clean: DataFrame, dim: DataFrame,
-               batchSize: Int = 50): Enriched =
-    enrich(cleanData(discover(raw, clean, batchSize)), dim)
 
   /** `conform_dbs` (etl_process.py:227-241), as an optional maintenance
     * job (its invocation is commented out in the reference — SURVEY

@@ -604,8 +604,6 @@ case class PqAdc(left: Expression, right: Expression, ksub: Int)
 object Vecs {
   def cosineSim(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  def dotProduct(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   def squaredDist(a: Column, b: Column): Column =
     ColumnBridge.column(SquaredDist(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   def signBucket(vec: Column, nbits: Int = 16, seed: Long = 7L): Column =

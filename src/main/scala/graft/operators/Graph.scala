@@ -1239,29 +1239,6 @@ object Graph {
         expr(s"(coalesce(s, 0L) * ${n}L) DIV ${k}L").as("betweenness_ppm"))
   }
 
-  /** Kleinberg HITS (hubs & authorities, SIAM JCOMP 1999) as the
-    * engine-portable integer fixed point on the [[pageRankE9]] BSP
-    * chassis: per step the mutual update
-    * `a(v) = Σ_{u→v} h(u)` then `h(u) = Σ_{u→v} a(v)`, each side
-    * L∞-NORMALIZED (divide by the step's max, the classic power-
-    * iteration stabilization — chosen over L1/L2 because an integer
-    * max-divide stays exact where a sqrt cannot) into ppm units, so
-    * every score lives in [0, 10⁶] with the step's best hub/authority
-    * pinned at exactly 10⁶ and the iteration can never overflow or
-    * drift. The normalizing products run in DECIMAL(38,0)
-    * (`s·10⁶ ≤ 10¹²·N` exceeds i64 past N ≈ 10⁷ — the pageRankE9
-    * `wide` treatment, unconditional here), landing back in BIGINT
-    * via DIV.
-    *
-    * Scale shape: each step is TWO of the chassis's canonical BSP
-    * shuffles (edges⋈scores on one endpoint, then groupBy the other
-    * with map-side combine absorbing degree skew); the per-step max is
-    * a 1-row broadcast (the dangling-mass pattern), and per-step
-    * localCheckpoints cut lineage so step N+1's plan never replans
-    * step N. Induced-subgraph restriction and the fail-loud empty-
-    * edge guard follow the chassis conventions (an empty edge list
-    * would put a 0 in the normalizing divisor — reject it, never
-    * divide). Returns (node, hub_ppm, auth_ppm). */
   /** Newman modularity of a community labeling, exact integer ppm —
     * the quality measure that closes the community family: LPA/CC
     * ASSIGN communities, this SCORES the assignment, the number a
@@ -1376,6 +1353,32 @@ object Graph {
       .orderBy("label")
   }
 
+  /** Kleinberg HITS (hubs & authorities, SIAM JCOMP 1999) as the
+    * engine-portable integer fixed point on the [[pageRankE9]] BSP
+    * chassis: per step the mutual update
+    * `a(v) = Σ_{u→v} h(u)` then `h(u) = Σ_{u→v} a(v)`, each side
+    * L∞-NORMALIZED (divide by the step's max, the classic power-
+    * iteration stabilization — chosen over L1/L2 because an integer
+    * max-divide stays exact where a sqrt cannot) into ppm units, so
+    * every score lives in [0, 10⁶] with the step's best hub/authority
+    * pinned at exactly 10⁶ and the iteration can never overflow or
+    * drift. The normalizing products run in DECIMAL(38,0)
+    * (`s·10⁶ ≤ 10¹²·N` exceeds i64 past N ≈ 10⁷ — the pageRankE9
+    * `wide` treatment, unconditional here), landing back in BIGINT
+    * via DIV.
+    *
+    * Scale shape: each step is TWO of the chassis's canonical BSP
+    * shuffles (edges⋈scores on one endpoint, then groupBy the other
+    * with map-side combine absorbing degree skew). Each side's raw
+    * sums are materialized by a checkpoint that observes their max on
+    * the same job ([[graft.core.BspLoop.checkpointObserved]]), and the
+    * normalization divides by that max as a literal — no extra job, no
+    * broadcast, no cross join — while the checkpoints cut lineage so
+    * step N+1's plan never replans step N. Induced-subgraph
+    * restriction and the fail-loud empty-edge guard follow the chassis
+    * conventions (an empty edge list would put a 0 in the normalizing
+    * divisor — reject it, never divide). Returns (node, hub_ppm,
+    * auth_ppm). */
   def hitsPpm(edges: DataFrame, nodes: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "HITS needs at least one mutual update")
     val Scale = 1000000L

@@ -907,7 +907,7 @@ object Extensions {
     // pool (deliberately so — see the no-further-lineage-cuts note
     // below), and the static planner without AQE turns their in-step
     // joins into shuffle joins; measured 1.8 s → 2.7 s pinned
-    // (LoopAqeAB, round 22). AQE stays on here.
+    // (interleaved loop-posture A/B, round 22). AQE stays on here.
     for (step <- 1 to 5) {
       val scoredStep =
         if (step == 1) remaining.withColumn("mmr", col("rel") * 7)
